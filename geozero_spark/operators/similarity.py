@@ -42,6 +42,22 @@ def _fold_mat(vecs) -> np.ndarray:
     return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
 
 
+def _arrow_mat(col, name: str) -> np.ndarray:
+    """(n, dim) float64 matrix from an Arrow list column of n vectors
+    (exact float->double widening, one contiguous values buffer).
+    NULL or ragged rows raise ValueError naming the column: reshaping
+    the flattened values would otherwise shift them across rows."""
+    n = len(col)
+    if col.null_count:
+        raise ValueError(f"vector column {name!r} has {col.null_count} "
+                         f"NULL row(s)")
+    lens = np.diff(np.asarray(col.offsets))
+    if n and (lens != lens[0]).any():
+        raise ValueError(f"vector column {name!r} is ragged: row "
+                         f"lengths range {lens.min()}..{lens.max()}")
+    return np.asarray(col.flatten(), dtype=np.float64).reshape(n, -1)
+
+
 def _fold_norm2(mat: np.ndarray) -> np.ndarray:
     """Per-row left fold of squares in ascending index order — the
     exact IEEE-double op sequence of norm2_expr (acc + v*v per j), so
@@ -194,14 +210,8 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
             n = b.num_rows
             if not n:
                 continue
-
-            def flat(name):
-                col = b.column(b.schema.get_field_index(name))
-                v = np.asarray(col.flatten(), dtype=np.float64)
-                return v.reshape(n, -1)
-
-            am = flat(qvec)
-            bm = flat(tvec)
+            am = _arrow_mat(b.column(b.schema.get_field_index(qvec)), qvec)
+            bm = _arrow_mat(b.column(b.schema.get_field_index(tvec)), tvec)
             dim = am.shape[1]
             dot = np.zeros(n, np.float64)
             qn = np.zeros(n, np.float64)
@@ -499,9 +509,7 @@ def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
             n = b.num_rows
             if not n:
                 continue
-            col = b.column(b.schema.get_field_index(vec))
-            x = np.asarray(col.flatten(),
-                           dtype=np.float64).reshape(n, -1)
+            x = _arrow_mat(b.column(b.schema.get_field_index(vec)), vec)
             dim = x.shape[1]
             qn = np.zeros(n, np.float64)
             for j in range(dim):

@@ -23,8 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import sqlgen as sg
-from ..kernel import mvt as kmvt
-from ..kernel import structrepr as sr
 from ..kernel import tiles as ktiles
 
 TILE_SCHEMA = ("z int, x bigint, y bigint, n_features int, "
@@ -185,34 +183,6 @@ def mvt_tiles(df: DataFrame, z: int, key: str = "url",
             out.append(d)
         return out
 
-    def _encode_kernel(keys_l, cols_l, left, bottom, right, top,
-                       props_l=None):
-        feats = []
-        skipped = 0
-        for i, k in enumerate(keys_l):
-            if cols_l[0][i] is None:
-                skipped += 1
-                continue
-            g = sr.from_struct({
-                "kind": cols_l[0][i], "has_z": cols_l[1][i],
-                "has_m": cols_l[2][i], "coords": cols_l[3][i],
-                "offs1": cols_l[4][i], "offs2": cols_l[5][i],
-                "wkb": cols_l[6][i]})
-            try:
-                tg = ktiles.transform_geom_to_tile(
-                    g, extent, left, bottom, right, top)
-                feats.append(kmvt.feature_from_geom(
-                    tg,
-                    properties=(props_l[i] if props_l is not None
-                                else {"id": str(k)}),
-                    fid=i))
-            except (ktiles.MvtValidityError, kmvt.MvtError):
-                skipped += 1
-        blob = kmvt.encode_tile(kmvt.MvtTile(
-            layers=[kmvt.MvtLayer(name=layer, extent=extent,
-                                  features=feats)]))
-        return blob, len(feats), skipped
-
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
         from . import mvt_fast
         zz = int(pdf["z"].iloc[0])
@@ -222,13 +192,9 @@ def mvt_tiles(df: DataFrame, z: int, key: str = "url",
         pdf = pdf.sort_values(key, kind="mergesort")
         keys_l, cols_l = _col_lists(pdf)
         props_l = _props_list(pdf, keys_l)
-        res = mvt_fast.encode_tile_cols(
+        blob, n_feats, skipped = mvt_fast.encode_tile_cols(
             layer, extent, keys_l, *cols_l, left, bottom, right, top,
             props_list=props_l)
-        if res is None:
-            res = _encode_kernel(keys_l, cols_l, left, bottom, right,
-                                 top, props_l=props_l)
-        blob, n_feats, skipped = res
         return pd.DataFrame([{"z": zz, "x": xx, "y": yy,
                               "n_features": n_feats,
                               "n_skipped": skipped, "mvt": blob}])

@@ -18,7 +18,17 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# the only read errors that mean "nothing written there yet": no such
+# path (no _meta before the first run), or a directory holding no data
+# files (a write whose pending buckets were all empty)
+_NOTHING_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _nothing_written(e: AnalysisException) -> bool:
+    return e.getCondition() in _NOTHING_WRITTEN
 
 
 def meta_path(base: str, stage: str) -> str:
@@ -29,7 +39,9 @@ def completed_buckets(spark: SparkSession, base: str, stage: str,
                       fingerprint: str) -> set[int]:
     try:
         m = spark.read.parquet(meta_path(base, stage))
-    except Exception:
+    except AnalysisException as e:
+        if not _nothing_written(e):
+            raise
         return set()
     return {r.bucket for r in
             m.where(F.col("fingerprint") == fingerprint)
@@ -89,13 +101,17 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("bucket").parquet(f"{base}/{stage}"))
     try:
+        written = spark.read.parquet(f"{base}/{stage}")
+    except AnalysisException as e:
+        # any other read error must not record real buckets as 0 rows
+        if not _nothing_written(e):
+            raise
+        counts = {}  # nothing written (all pending buckets empty)
+    else:
         counts = {r.bucket: r.cnt for r in
-                  spark.read.parquet(f"{base}/{stage}")
-                  .where(F.col("bucket").isin(todo))
+                  written.where(F.col("bucket").isin(todo))
                   .groupBy("bucket").agg(F.count("*").alias("cnt"))
                   .collect()}
-    except Exception:
-        counts = {}  # nothing written (all pending buckets empty)
     wall = round(time.perf_counter() - t0, 3)
     now = time.time()
     rec = spark.createDataFrame(

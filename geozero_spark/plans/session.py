@@ -17,7 +17,9 @@ def make_session(app: str = "geozero-spark", cpus: int | None = None,
                  shuffle_partitions: int | None = None,
                  extra: dict | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # the cores this process may run on, not a fixed cluster size
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     b = (SparkSession.builder

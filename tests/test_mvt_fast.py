@@ -1,4 +1,7 @@
-"""mvt_fast must produce BYTE-IDENTICAL layers to the kernel encoder."""
+"""mvt_fast.encode_tile_cols must produce BYTE-IDENTICAL tiles to the
+kernel encoder (kernel.mvt.encode_tile) — in its per-feature python
+branch (< _VECTOR_MIN features), its columnar branch (>= _VECTOR_MIN)
+and its whole-tile kernel fallback (curve / Z / M / raw-WKB features)."""
 
 import numpy as np
 import pytest
@@ -11,6 +14,7 @@ from geozero_spark.operators import mvt_fast
 
 BOUNDS = (-10.0, -5.0, 10.0, 5.0)  # left, bottom, right, top
 EXTENT = 4096
+COLS = ("kind", "has_z", "has_m", "coords", "offs1", "offs2", "wkb")
 
 GEOMS = [
     "POINT(0 0)",
@@ -25,36 +29,81 @@ GEOMS = [
     "(4.5 4.5,5 4.5,5 5,4.5 5,4.5 4.5)))",
 ]
 
+# features encode_tile_cols hands to the kernel encoder whole-tile
+EXOTIC = [
+    "CIRCULARSTRING(0 0,1 1,2 0)",
+    "POINT Z (1 2 3)",
+    "POINT M (1 2 3)",
+]
 
-def _kernel_layer(geoms_wkt):
-    feats = []
-    for i, w in enumerate(geoms_wkt):
-        g = wkt.decode(w)
-        tg = ktiles.transform_geom_to_tile(g, EXTENT, *BOUNDS)
-        feats.append(kmvt.feature_from_geom(
-            tg, properties={"id": str(i)}, fid=i))
-    return kmvt._encode_layer(
-        kmvt.MvtLayer(name="layer", extent=EXTENT, features=feats))
-
-
-def _fast_layer(geoms_wkt):
-    feats = []
-    for i, w in enumerate(geoms_wkt):
-        rec = sr.to_struct(wkt.decode(w))
-        r = mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS)
-        assert r is not None, w
-        kind, seqs = r
-        feats.append((i, {"id": str(i)}, kind, seqs))
-    return mvt_fast.encode_layer_fast("layer", EXTENT, feats)
+FORCE_COLUMNAR = 0          # _VECTOR_MIN value that vectorizes every tile
+FORCE_PYTHON = 10 ** 9      # _VECTOR_MIN value that never vectorizes
 
 
-def test_layer_bytes_identical():
-    assert _fast_layer(GEOMS) == _kernel_layer(GEOMS)
+def _recs(geoms_wkt):
+    return [sr.to_struct(wkt.decode(w)) for w in geoms_wkt]
 
 
-def test_each_geom_individually():
+def _cols(recs):
+    """Per-feature structs (None = absent feature) -> the parallel column
+    lists encode_tile_cols takes, as tiling's flat-column shuffle
+    delivers them."""
+    return [[None if r is None else r[c] for r in recs] for c in COLS]
+
+
+def _fast(recs, keys=None, props=None):
+    keys = [str(i) for i in range(len(recs))] if keys is None else keys
+    return mvt_fast.encode_tile_cols("layer", EXTENT, keys, *_cols(recs),
+                                     *BOUNDS, props_list=props)
+
+
+def _kernel(recs, keys=None, props=None):
+    """Reference: kernel.mvt.encode_tile over the features that pass the
+    kernel's MVT validity rules, fid = row index; returns the same
+    (bytes, n_features, n_skipped) shape as encode_tile_cols."""
+    keys = [str(i) for i in range(len(recs))] if keys is None else keys
+    feats, skipped = [], 0
+    for i, rec in enumerate(recs):
+        if rec is None:
+            skipped += 1
+            continue
+        try:
+            tg = ktiles.transform_geom_to_tile(sr.from_struct(rec), EXTENT,
+                                               *BOUNDS)
+            feats.append(kmvt.feature_from_geom(
+                tg, properties=({"id": str(keys[i])} if props is None
+                                else props[i]), fid=i))
+        except (ktiles.MvtValidityError, kmvt.MvtError):
+            skipped += 1
+    blob = kmvt.encode_tile(kmvt.MvtTile(layers=[
+        kmvt.MvtLayer(name="layer", extent=EXTENT, features=feats)]))
+    return blob, len(feats), skipped
+
+
+def _both_branches(monkeypatch, recs, keys=None, props=None):
+    """encode_tile_cols with the python branch and with the columnar
+    branch forced; both must equal the kernel reference."""
+    want = _kernel(recs, keys, props)
+    for vmin in (FORCE_PYTHON, FORCE_COLUMNAR):
+        monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", vmin)
+        assert _fast(recs, keys, props) == want, vmin
+    return want
+
+
+def test_layer_bytes_identical(monkeypatch):
+    # the tile is field 3 wrapped around exactly the kernel's layer
+    recs = _recs(GEOMS)
+    layer = kmvt._encode_layer(kmvt.decode_tile(_kernel(recs)[0]).layers[0])
+    want = bytearray()
+    kmvt._write_bytes(want, 3, layer)
+    for vmin in (FORCE_PYTHON, FORCE_COLUMNAR):
+        monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", vmin)
+        assert _fast(recs)[0] == bytes(want), vmin
+
+
+def test_each_geom_individually(monkeypatch):
     for w in GEOMS:
-        assert _fast_layer([w]) == _kernel_layer([w]), w
+        assert _both_branches(monkeypatch, _recs([w]))[1:] == (1, 0), w
 
 
 def test_varints_np_matches_kernel():
@@ -71,81 +120,66 @@ def test_varints_np_matches_kernel():
     assert int(lens.sum()) == len(blob)
 
 
-def test_validity_skips_match():
-    # degenerate ring collapses identically on both paths
-    w = "POLYGON((0 0,0.0001 0,0 0.0001,0 0))"
-    g = wkt.decode(w)
-    rec = sr.to_struct(g)
-    kerr = ferr = False
-    try:
-        ktiles.transform_geom_to_tile(g, EXTENT, *BOUNDS)
-    except ktiles.MvtValidityError:
-        kerr = True
-    try:
-        mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS)
-    except kmvt.MvtError:
-        ferr = True
-    assert kerr == ferr
+# (wkt, skipped by the kernel): rings and lines too short for MVT are
+# skipped; a ring collapsing onto one tile coordinate is not (validity
+# counts coordinates, not distinct ones)
+VALIDITY = [
+    ("POLYGON((0 0,1 1,0 0))", True),
+    ("MULTIPOLYGON(((0 0,2 0,2 2,0 0)),((4 4,5 5,4 4)))", True),
+    ("MULTILINESTRING((0 0,1 1),(2 2))", True),
+    ("POLYGON((0 0,0.0001 0,0 0.0001,0 0))", False),
+]
 
 
-def test_fallback_for_exotic():
-    rec = sr.to_struct(wkt.decode("CIRCULARSTRING(0 0,1 1,2 0)"))
-    assert mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS) is None
-    rec = sr.to_struct(wkt.decode("POINT(1 2 3)"))
-    assert mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS) is None
+def test_validity_skips_match(monkeypatch):
+    for w, skip in VALIDITY:
+        want = _both_branches(monkeypatch, _recs([w, "POINT(1 1)"]))
+        assert want[1:] == ((1, 1) if skip else (2, 0)), w
 
 
-def _tile_fast_batched(geoms_wkt):
-    items = [(str(i), sr.to_struct(wkt.decode(w)))
-             for i, w in enumerate(geoms_wkt)]
-    r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    assert r is not None
-    blob, n, skipped = r
-    return blob, n, skipped
-
-
-def _tile_kernel(geoms_wkt):
-    layer = _kernel_layer(geoms_wkt)
-    out = bytearray()
-    kmvt._write_bytes(out, 3, layer)
-    return bytes(out)
+def test_fallback_for_exotic(monkeypatch):
+    # every curve / Z / M feature routes the whole tile through the
+    # kernel encoder, whichever branch its size would pick; the kernel
+    # drops Z/M and skips curves (no MVT geometry type)
+    for w in EXOTIC:
+        for recs in (_recs([w]), _recs([w] + GEOMS),
+                     _recs(GEOMS * 8 + [w])):
+            want = _both_branches(monkeypatch, recs)
+            assert want[1:] == ((len(recs) - 1, 1) if w.startswith("CIRC")
+                                else (len(recs), 0)), w
 
 
 def test_batched_tile_bytes_identical():
-    blob, n, skipped = _tile_fast_batched(GEOMS)
+    blob, n, skipped = _fast(_recs(GEOMS))
     assert skipped == 0 and n == len(GEOMS)
-    assert blob == _tile_kernel(GEOMS)
+    assert (blob, n, skipped) == _kernel(_recs(GEOMS))
 
 
 def test_batched_each_geom_individually():
+    # one-kind tiles past _VECTOR_MIN take the columnar builders
+    # (points / lines / single-ring polygons) or its python slots
+    n = mvt_fast._VECTOR_MIN + 1
     for w in GEOMS:
-        blob, _, _ = _tile_fast_batched([w])
-        assert blob == _tile_kernel([w]), w
+        recs = _recs([w] * n)
+        assert _fast(recs) == _kernel(recs), w
 
 
 def test_batched_validity_skip_and_fallback():
-    # degenerate line -> skipped, not fatal
-    items = [("0", sr.to_struct(wkt.decode("POINT(0 0)"))),
-             ("1", sr.to_struct(wkt.decode("LINESTRING(1 1,1 1)")))]
-    # same-coord linestring transforms to <2 distinct... still 2 coords
-    # in tile space -> encoder emits it; use a 1-point struct instead
+    # a 1-coordinate linestring is skipped, not fatal
     bad = sr.to_struct(wkt.decode("LINESTRING(1 1,2 2)"))
     bad["coords"] = bad["coords"][:2]  # truncate to one coordinate
-    items[1] = ("1", bad)
-    r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    blob, n, skipped = r
-    assert n == 1 and skipped == 1
-    # exotic kind -> whole-tile fallback (None)
-    exo = sr.to_struct(wkt.decode("CIRCULARSTRING(0 0,1 1,2 0)"))
-    r = mvt_fast.encode_tile_fast(
-        "layer", EXTENT, [("0", exo)], *BOUNDS)
-    assert r is None
+    recs = [sr.to_struct(wkt.decode("POINT(0 0)")), bad]
+    blob, n, skipped = _fast(recs)
+    assert (n, skipped) == (1, 1)
+    assert (blob, n, skipped) == _kernel(recs)
+    # exotic kinds -> whole-tile kernel fallback, same bytes
+    for w in EXOTIC:
+        exo = _recs(["POINT(0 0)", w])
+        assert _fast(exo) == _kernel(exo), w
 
 
 def test_vectorized_big_tile_bytes_identical():
-    """>= _VECTOR_MIN features exercises the columnar command builder;
-    bytes must equal both the kernel path and the per-feature python
-    branch (forced via _VECTOR_MIN monkeypatch)."""
+    """>= _VECTOR_MIN features exercises the columnar command builder."""
     rng = np.random.default_rng(7)
     geoms = []
     for i in range(40):
@@ -166,141 +200,104 @@ def test_vectorized_big_tile_bytes_identical():
         ]
     geoms += GEOMS  # multipoint/multiline/holes hit the python scatter
     assert len(geoms) >= mvt_fast._VECTOR_MIN
-    blob, n, skipped = _tile_fast_batched(geoms)
+    recs = _recs(geoms)
+    blob, n, skipped = _fast(recs)
     assert skipped == 0 and n == len(geoms)
-    assert blob == _tile_kernel(geoms)
+    assert (blob, n, skipped) == _kernel(recs)
 
 
 def test_vectorized_matches_python_branch_with_skips(monkeypatch):
     """None rows, invalid linestrings and degenerate rings must skip
     identically in both branches (same n/skipped AND same bytes)."""
     rng = np.random.default_rng(11)
-    items = []
+    recs = []
     for i in range(90):
         x = float(rng.uniform(-9, 9))
         y = float(rng.uniform(-4, 4))
         mod = i % 6
         if mod == 0:
-            items.append((str(i), None))
+            recs.append(None)
         elif mod == 1:
             bad = sr.to_struct(
                 wkt.decode(f"LINESTRING({x:.3f} {y:.3f},0 0)"))
             bad["coords"] = bad["coords"][:2]  # 1 coord -> skip
-            items.append((str(i), bad))
+            recs.append(bad)
         elif mod == 2:
-            # ring degenerates to <3 distinct coords in tile space
+            # ring collapses onto one tile coordinate (kept)
             w = (f"POLYGON(({x:.5f} {y:.5f},{x + 1e-05:.5f} {y:.5f},"
                  f"{x:.5f} {y + 1e-05:.5f},{x:.5f} {y:.5f}))")
-            items.append((str(i), sr.to_struct(wkt.decode(w))))
+            recs.append(sr.to_struct(wkt.decode(w)))
+        elif mod == 3:
+            # 2-coordinate ring -> skip
+            recs.append(sr.to_struct(wkt.decode(
+                f"POLYGON(({x:.3f} {y:.3f},0 0,{x:.3f} {y:.3f}))")))
         else:
-            items.append((str(i), sr.to_struct(wkt.decode(
-                f"POINT({x:.4f} {y:.4f})"))))
-    r_vec = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", 10 ** 9)
-    r_py = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    assert r_vec == r_py
+            recs.append(sr.to_struct(wkt.decode(
+                f"POINT({x:.4f} {y:.4f})")))
+    r_vec = _fast(recs)
+    assert r_vec == _kernel(recs)
+    monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", FORCE_PYTHON)
+    assert _fast(recs) == r_vec
     assert r_vec[2] > 0  # some features actually skipped
 
 
 def test_columnar_framing_dedups_duplicate_keys(monkeypatch):
     # repeated feature keys must share one values-table slot in the
-    # columnar framer exactly like the dict-based framer
-    items = [("dup" if i % 3 == 0 else str(i),
-              sr.to_struct(wkt.decode(f"POINT({i % 9 - 4} {i % 4 - 2})")))
-             for i in range(100)]
-    r_vec = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", 10 ** 9)
-    r_py = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    assert r_vec == r_py
-
-
-def _cols_from_items(items):
-    """Flatten [(key, rec_or_None)] into encode_tile_cols' parallel
-    column lists (what tiling's flat-column shuffle delivers)."""
-    keys = [k for k, _ in items]
-    cols = {f: [] for f in ("kind", "has_z", "has_m", "coords",
-                            "offs1", "offs2", "wkb")}
-    for _, rec in items:
-        for f in cols:
-            cols[f].append(None if rec is None else rec.get(f))
-    return keys, cols
+    # columnar framer exactly like the kernel's dedup
+    keys = ["dup" if i % 3 == 0 else str(i) for i in range(100)]
+    recs = _recs([f"POINT({i % 9 - 4} {i % 4 - 2})" for i in range(100)])
+    assert _fast(recs, keys) == _kernel(recs, keys)
+    _both_branches(monkeypatch, recs, keys)
 
 
 @pytest.mark.parametrize("force_python", [False, True])
 def test_cols_branch_bytes_identical(monkeypatch, force_python):
-    """encode_tile_cols is the THIRD parity-pinned branch: same
-    (bytes, n, skipped) as encode_tile_fast on the same features —
-    including None rows, duplicate keys, multi-ring/multi-part
-    fallback features and skip-inducing degenerates — both above and
-    below the columnar threshold."""
+    """Same (bytes, n, skipped) as the kernel on None rows, duplicate
+    keys, multi-ring/multi-part python-slot features and skip-inducing
+    degenerates — both above and below the columnar threshold."""
     rng = np.random.default_rng(23)
-    items = []
+    keys, recs = [], []
     for i in range(120):
         x = float(rng.uniform(-9, 9))
         y = float(rng.uniform(-4, 4))
         mod = i % 7
-        key = "dup" if i % 5 == 0 else str(i)
+        keys.append("dup" if i % 5 == 0 else str(i))
         if mod == 0:
-            items.append((key, None))
+            recs.append(None)
         elif mod == 1:
-            items.append((key, sr.to_struct(wkt.decode(
+            recs.append(sr.to_struct(wkt.decode(
                 f"MULTILINESTRING(({x:.3f} {y:.3f},0 0),"
-                f"(1 1,2 2,3 1))"))))          # multi-part python slot
+                f"(1 1,2 2,3 1))")))          # multi-part python slot
         elif mod == 2:
             w = (f"POLYGON(({x:.5f} {y:.5f},{x + 1e-05:.5f} {y:.5f},"
                  f"{x:.5f} {y + 1e-05:.5f},{x:.5f} {y:.5f}))")
-            items.append((key, sr.to_struct(wkt.decode(w))))  # skip
+            recs.append(sr.to_struct(wkt.decode(w)))  # collapsed ring
         elif mod == 3:
-            items.append((key, sr.to_struct(wkt.decode(
+            recs.append(sr.to_struct(wkt.decode(
                 f"POLYGON(({x:.3f} {y:.3f},{x + 0.8:.3f} {y:.3f},"
                 f"{x + 0.8:.3f} {y + 0.6:.3f},{x:.3f} {y + 0.6:.3f},"
                 f"{x:.3f} {y:.3f}),({x + 0.2:.3f} {y + 0.2:.3f},"
                 f"{x + 0.4:.3f} {y + 0.2:.3f},{x + 0.2:.3f} "
-                f"{y + 0.4:.3f},{x + 0.2:.3f} {y + 0.2:.3f}))"))))
+                f"{y + 0.4:.3f},{x + 0.2:.3f} {y + 0.2:.3f}))")))
         else:
-            items.append((key, sr.to_struct(wkt.decode(
-                f"POINT({x:.4f} {y:.4f})"))))
+            recs.append(sr.to_struct(wkt.decode(
+                f"POINT({x:.4f} {y:.4f})")))
     if force_python:
-        monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", 10 ** 9)
-    for n_take in (3, len(items)):  # below/above _VECTOR_MIN
-        sub = items[:n_take]
-        r_fast = mvt_fast.encode_tile_fast(
-            "layer", EXTENT, sub, *BOUNDS)
-        keys, c = _cols_from_items(sub)
-        r_cols = mvt_fast.encode_tile_cols(
-            "layer", EXTENT, keys, c["kind"], c["has_z"], c["has_m"],
-            c["coords"], c["offs1"], c["offs2"], c["wkb"], *BOUNDS)
-        assert r_cols == r_fast
-        assert r_fast is not None and r_fast[2] > 0
+        monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", FORCE_PYTHON)
+    for n_take in (3, len(recs)):  # below/above _VECTOR_MIN
+        r = _fast(recs[:n_take], keys[:n_take])
+        assert r == _kernel(recs[:n_take], keys[:n_take])
+        assert r[2] > 0
 
 
 def test_cols_branch_fallback_agreement():
-    """An ineligible feature (raw-WKB exotic) makes BOTH branches
-    return None (whole-tile kernel fallback)."""
+    """A flat-kind feature carrying a raw WKB payload takes the kernel
+    path for the whole tile, with the kernel's bytes and counts."""
     good = sr.to_struct(wkt.decode("POINT(1 1)"))
     exotic = dict(good)
-    exotic["wkb"] = b"\x01\x08\x00\x00\x00"  # circularstring marker
-    items = [("a", good), ("b", exotic)]
-    assert mvt_fast.encode_tile_fast("layer", EXTENT, items,
-                                     *BOUNDS) is None
-    keys, c = _cols_from_items(items)
-    assert mvt_fast.encode_tile_cols(
-        "layer", EXTENT, keys, c["kind"], c["has_z"], c["has_m"],
-        c["coords"], c["offs1"], c["offs2"], c["wkb"], *BOUNDS) is None
-
-
-def _kernel_tile_props(geoms_wkt, props_list):
-    feats = []
-    for i, w in enumerate(geoms_wkt):
-        g = wkt.decode(w)
-        tg = ktiles.transform_geom_to_tile(g, EXTENT, *BOUNDS)
-        feats.append(kmvt.feature_from_geom(
-            tg, properties=props_list[i], fid=i))
-    layer = kmvt._encode_layer(
-        kmvt.MvtLayer(name="layer", extent=EXTENT, features=feats))
-    out = bytearray()
-    kmvt._write_bytes(out, 3, layer)
-    return bytes(out)
+    exotic["wkb"] = _recs(["CIRCULARSTRING(0 0,1 1,2 0)"])[0]["wkb"]
+    for recs in ([good, exotic], [good] * 70 + [exotic, None]):
+        assert _fast(recs) == _kernel(recs)
 
 
 def _props_for(i):
@@ -316,58 +313,37 @@ def _props_for(i):
 
 @pytest.mark.parametrize("n_feats", [5, 120])
 def test_typed_props_three_branches_byte_identical(n_feats):
-    """Typed feature properties through the sink keep all THREE
-    branches byte-identical to the kernel encoder (mvt_writer.rs:
-    380-401 value mapping, :357-374 tag/key/value dedup): the
-    per-feature python branch (< _VECTOR_MIN), the columnar command
-    branch (>= _VECTOR_MIN, frames via the general key/value-dedup
-    framer), and encode_tile_cols' flat-column twin."""
+    """Typed feature properties keep all THREE encode paths byte-
+    identical to the kernel encoder (mvt_writer.rs:380-401 value
+    mapping, :357-374 tag/key/value dedup): the per-feature python
+    branch (5 < _VECTOR_MIN), the columnar command branch (120, framed
+    via the general key/value-dedup framer), and the kernel fallback
+    (the same tile plus one Z feature)."""
     geoms = [GEOMS[i % len(GEOMS)] for i in range(n_feats)]
-    props = [_props_for(i) for i in range(n_feats)]
-
-    want = _kernel_tile_props(geoms, props)
-
-    items = [(str(i), sr.to_struct(wkt.decode(w)))
-             for i, w in enumerate(geoms)]
-    r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS,
-                                  props_list=props)
-    assert r is not None
-    blob, n, skipped = r
-    assert (n, skipped) == (n_feats, 0)
-    assert blob == want
-
-    keys, cols = _cols_from_items(items)
-    r2 = mvt_fast.encode_tile_cols(
-        "layer", EXTENT, keys, cols["kind"], cols["has_z"],
-        cols["has_m"], cols["coords"], cols["offs1"], cols["offs2"],
-        cols["wkb"], *BOUNDS, props_list=props)
-    assert r2 is not None
-    assert r2[0] == want
+    for tail in ([], ["POINT Z (1 2 3)"]):
+        recs = _recs(geoms + tail)
+        props = [_props_for(i) for i in range(len(recs))]
+        r = _fast(recs, props=props)
+        assert r[1:] == (len(recs), 0)
+        assert r == _kernel(recs, props=props)
 
 
 def test_typed_props_default_unchanged():
-    """props_list=None keeps the original {"id": str(key)} bytes —
-    the pinned pre-props behavior (and the single-key columnar
-    framer) is untouched."""
-    geoms = [GEOMS[i % len(GEOMS)] for i in range(120)]
+    """props_list=None keeps the original {"id": str(key)} bytes — the
+    single-key columnar framer equals the general framer on the same
+    properties, and both equal the kernel."""
+    recs = _recs([GEOMS[i % len(GEOMS)] for i in range(120)])
     id_props = [{"id": str(i)} for i in range(120)]
-    items = [(str(i), sr.to_struct(wkt.decode(w)))
-             for i, w in enumerate(geoms)]
-    r_default = mvt_fast.encode_tile_fast("layer", EXTENT, items,
-                                          *BOUNDS)
-    r_explicit = mvt_fast.encode_tile_fast("layer", EXTENT, items,
-                                           *BOUNDS,
-                                           props_list=id_props)
-    assert r_default is not None and r_explicit is not None
-    assert r_default[0] == r_explicit[0] == _kernel_tile_props(
-        geoms, id_props)
+    r_default = _fast(recs)
+    assert r_default == _fast(recs, props=id_props)
+    assert r_default == _kernel(recs)
 
 
 def test_typed_props_random_parity():
-    """Property-based three-branch parity: random typed prop dicts
-    (value collisions for dedup, absent keys, all four MVT value
-    types, empty dicts) against the kernel encoder, above and below
-    the columnar threshold."""
+    """Property-based parity: random typed prop dicts (value collisions
+    for dedup, absent keys, all four MVT value types, empty dicts)
+    against the kernel encoder, above and below the columnar
+    threshold."""
     from hypothesis import given, settings, strategies as st
 
     vals = st.one_of(
@@ -388,19 +364,8 @@ def test_typed_props_random_parity():
             reps = (mvt_fast._VECTOR_MIN // n) + 1
             prop_dicts = prop_dicts * reps
             n = len(prop_dicts)
-        geoms = [GEOMS[i % len(GEOMS)] for i in range(n)]
-        want = _kernel_tile_props(geoms, prop_dicts)
-        items = [(str(i), sr.to_struct(wkt.decode(w)))
-                 for i, w in enumerate(geoms)]
-        r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS,
-                                      props_list=prop_dicts)
-        assert r is not None and r[0] == want
-        keys, cols = _cols_from_items(items)
-        r2 = mvt_fast.encode_tile_cols(
-            "layer", EXTENT, keys, cols["kind"], cols["has_z"],
-            cols["has_m"], cols["coords"], cols["offs1"],
-            cols["offs2"], cols["wkb"], *BOUNDS,
-            props_list=prop_dicts)
-        assert r2 is not None and r2[0] == want
+        recs = _recs([GEOMS[i % len(GEOMS)] for i in range(n)])
+        assert _fast(recs, props=prop_dicts) == _kernel(
+            recs, props=prop_dicts)
 
     run()

@@ -175,3 +175,45 @@ def test_ivf_fast_plan_has_no_collect_list(spark):
     slow_plan = S._centroid_means(a, t, "t_id", "tvec", False) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" in slow_plan
+
+
+def _pair_batch(qvecs, tvecs):
+    import pyarrow as pa
+    n = len(qvecs)
+    return pa.record_batch(
+        [pa.array(range(n), pa.int64()), pa.array(range(n), pa.int64()),
+         pa.array(qvecs, pa.list_(pa.float32())),
+         pa.array(tvecs, pa.list_(pa.float32()))],
+        names=["q", "t", "qv", "tv"])
+
+
+def test_vector_columns_reject_null_and_ragged_rows():
+    """A NULL or ragged vector row must fail loudly naming its column,
+    not reshape the flattened values across rows: with n=2, dim=4 and
+    one NULL row the 4 remaining values would score as two 2-d rows."""
+    import pytest
+
+    score = S._pair_cosine_fn("q", "t", "qv", "tv")
+    good = [[1.0, 2.0, 3.0, 4.0], [4.0, 3.0, 2.0, 1.0]]
+    ok = list(score(iter([_pair_batch(good, good)])))
+    assert ok[0].num_rows == 2
+    with pytest.raises(ValueError, match="'tv' has 1 NULL row"):
+        list(score(iter([_pair_batch(good, [good[0], None])])))
+    with pytest.raises(ValueError, match="'qv' is ragged"):
+        list(score(iter([_pair_batch([good[0], [1.0, 2.0, 3.0]], good)])))
+
+
+def test_assign_rejects_null_vector(spark):
+    # n=2, dim=4, one NULL row: the 4 values left must not be read as
+    # a (2, 2) matrix and assigned silently
+    c = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "cid long, cvec array<double>")
+    v = spark.createDataFrame([(1, [1.0, 2.0, 3.0, 4.0]), (2, None)],
+                              "t_id long, tvec array<float>")
+    try:
+        S._assign(v, c, "t_id", "tvec").collect()
+    except Exception as e:  # the executor's error arrives wrapped
+        assert "vector column 'tvec' has 1 NULL row" in str(e)
+    else:
+        raise AssertionError("NULL vector row was not rejected")

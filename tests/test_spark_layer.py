@@ -117,6 +117,55 @@ def test_run_stage_rejects_bucket_column(spark, tmpdir_path):
                        n_buckets=4, fingerprint="v1")
 
 
+def test_run_stage_all_empty_buckets_record_zeros(spark, tmpdir_path):
+    # an input with no rows leaves the stage dir without data files;
+    # that read error alone means "nothing written" -> zero-row records
+    base = os.path.join(tmpdir_path, "stages_empty")
+    df = spark.range(0).withColumn("k", F.col("id").cast("string"))
+    m = meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                       n_buckets=4, fingerprint="v1")
+    assert sorted((b, r) for b, r, _ in m) == [(b, 0) for b in range(4)]
+    rows = meta.stage_metrics(spark, base, "s1").collect()
+    assert sorted((r.bucket, r.rows) for r in rows) == [
+        (b, 0) for b in range(4)]
+
+
+def test_run_stage_propagates_read_errors(spark, tmpdir_path,
+                                          monkeypatch):
+    """A read error other than "nothing written yet" must propagate
+    from both run_stage reads (the _meta resume read and the written-
+    row counts) instead of recording the pending buckets as 0 rows."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    base = os.path.join(tmpdir_path, "stages_err")
+    df = spark.range(100).withColumn("k", F.col("id").cast("string"))
+    real = DataFrameReader.parquet
+
+    def fail_on(target):
+        def parquet(self, *paths, **kw):
+            if paths[0] == target:
+                raise AnalysisException(message="injected read failure")
+            return real(self, *paths, **kw)
+        monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+
+    fail_on(f"{base}/s1")  # the counts read after the write
+    with pytest.raises(AnalysisException, match="injected"):
+        meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                       n_buckets=4, fingerprint="v1")
+    assert not os.path.exists(meta.meta_path(base, "s1"))
+
+    monkeypatch.setattr(DataFrameReader, "parquet", real)
+    meta.run_stage(spark, df, base, "s1", bucket_col="k", n_buckets=4,
+                   fingerprint="v1")
+    fail_on(meta.meta_path(base, "s1"))  # the resume read
+    with pytest.raises(AnalysisException, match="injected"):
+        meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                       n_buckets=4, fingerprint="v2")
+    monkeypatch.setattr(DataFrameReader, "parquet", real)
+    assert meta.stage_metrics(spark, base, "s1").count() == 4
+
+
 def test_minhash_fast_mode_runs(spark):
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
