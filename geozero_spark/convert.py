@@ -25,15 +25,20 @@ Dispatch table (reference parity + the repo's extra formats):
 reference only pushes its --extent into fgb/parquet and ignores it for
 csv/geojson/wkt inputs; filtering uniformly is the superset a Spark
 engine gets for free — for fgb it is additionally pushed into the
-index). Single-file text/binary sinks are produced by ONE executor
-task (temp-write + rename, the write_fgb pattern) — rows never transit
-the driver; on a real cluster the destination must be shared storage.
+index). Every sink writes ONE file from ONE executor task through
+``readers._write_one_file`` (drain the coalesced rows, encode them to
+bytes, temp-write + rename in ``readers._replace``) — rows never
+transit the driver; on a real cluster the destination must be shared
+storage. The partition-parallel directory sinks
+(``readers.write_fgb_dir``/``write_gpkg_dir``) share the same drain
+and rename through ``readers._write_file_per_partition``, which
+refuses a directory already holding ``part-*`` files of its format.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -157,25 +162,6 @@ def _expand_props(df: DataFrame, keys: list) -> DataFrame:
         "geom", *[F.col("props").getItem(k).alias(k) for k in keys])
 
 
-def _write_single_text(df: DataFrame, path: str, render) -> int:
-    """ONE-task text sink (temp-write + rename): ``render(pdf) ->
-    (text, n_features)`` runs inside the executor over the coalesced
-    rows — the single-container dual of write_fgb."""
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        got = list(batches)
-        pdf = (pd.concat(got, ignore_index=True) if got
-               else pd.DataFrame(columns=["geom", "props"]))
-        text, n = render(pdf)
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(text)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [n]})
-
-    return int(df.coalesce(1).mapInPandas(part, "n long")
-               .agg(F.sum("n")).collect()[0][0] or 0)
-
-
 def _features_of(pdf: pd.DataFrame) -> list:
     feats = []
     for i in range(len(pdf)):
@@ -190,7 +176,8 @@ def _render_wkt(pdf):
     from .kernel import wkt as kwkt
     lines = [kwkt.encode(g) for g, _ in _features_of(pdf)
              if g is not None]
-    return "\n".join(lines) + ("\n" if lines else ""), len(lines)
+    text = "\n".join(lines) + ("\n" if lines else "")
+    return text.encode("utf-8"), len(lines)
 
 
 def _render_csv(keys):
@@ -206,7 +193,7 @@ def _render_csv(keys):
             w.writerow([("" if g is None else kwkt.encode(g))]
                        + [props.get(k, "") or "" for k in keys])
             n += 1
-        return out.getvalue(), n
+        return out.getvalue().encode("utf-8"), n
     return render
 
 
@@ -223,12 +210,13 @@ def _render_geojson_fc(pdf):
     feats = [_feature_json(g, p) for g, p in _features_of(pdf)]
     body = ",\n".join(feats)
     return ('{\n"type": "FeatureCollection",\n"features": ['
-            + body + "]\n}\n"), len(feats)
+            + body + "]\n}\n").encode("utf-8"), len(feats)
 
 
 def _render_geojson_lines(pdf):
     feats = [_feature_json(g, p) for g, p in _features_of(pdf)]
-    return "\n".join(feats) + ("\n" if feats else ""), len(feats)
+    text = "\n".join(feats) + ("\n" if feats else "")
+    return text.encode("utf-8"), len(feats)
 
 
 def _render_svg(bounds, width, height):
@@ -238,7 +226,7 @@ def _render_svg(bounds, width, height):
                  for g, _ in _features_of(pdf) if g is not None]
         doc = ksvg.document(feats, bounds=bounds, invert_y=True,
                             width=width, height=height)
-        return doc, len(feats)
+        return doc.encode("utf-8"), len(feats)
     return render
 
 
@@ -268,24 +256,24 @@ def convert(spark: SparkSession, src: str, dst: str,
     (main.rs:154-178) over the repo's own readers/writers."""
     df = _read_source(spark, src, bbox, csv_geometry_column)
     ext = _ext(dst)
-    if ext == "wkt":
-        return _write_single_text(df, dst, _render_wkt)
-    if ext == "csv":
-        return _write_single_text(df, dst, _render_csv(_prop_keys(df)))
-    if ext in ("json", "geojson"):
-        return _write_single_text(df, dst, _render_geojson_fc)
-    if ext in ("jsonl", "geojsonl"):
-        return _write_single_text(df, dst, _render_geojson_lines)
-    if ext == "svg":
-        # two-pass: extent first (its own tiny aggregate job), then
-        # the framed document (main.rs:166-173)
-        extent = _svg_extent(df, bbox)
-        return _write_single_text(
-            df, dst, _render_svg(extent, svg_width, svg_height))
     if ext == "fgb":
         return readers.write_fgb(_expand_props(df, _prop_keys(df)), dst)
     if ext == "gpkg":
         return readers.write_gpkg(_expand_props(df, _prop_keys(df)),
                                   dst)
-    raise ValueError(f"Unknown output file extension .{ext} "
-                     f"(main.rs:177)")
+    if ext == "wkt":
+        render = _render_wkt
+    elif ext == "csv":
+        render = _render_csv(_prop_keys(df))
+    elif ext in ("json", "geojson"):
+        render = _render_geojson_fc
+    elif ext in ("jsonl", "geojsonl"):
+        render = _render_geojson_lines
+    elif ext == "svg":
+        # two-pass: extent first (its own tiny aggregate job), then
+        # the framed document (main.rs:166-173)
+        render = _render_svg(_svg_extent(df, bbox), svg_width, svg_height)
+    else:
+        raise ValueError(f"Unknown output file extension .{ext} "
+                         f"(main.rs:177)")
+    return readers._write_one_file(df, dst, render)

@@ -131,15 +131,6 @@ def bbox_ymax(geom: Column) -> Column:
     return F.element_at(geom["bbox"], 4)
 
 
-def bbox_intersects(geom: Column, xmin: float, ymin: float, xmax: float,
-                    ymax: float) -> Column:
-    """PostGIS `&&` equivalent (geozero-bench/benches/geobench.rs:84-90)."""
-    return (bbox_xmin(geom) <= F.lit(xmax)) & \
-           (bbox_xmax(geom) >= F.lit(xmin)) & \
-           (bbox_ymin(geom) <= F.lit(ymax)) & \
-           (bbox_ymax(geom) >= F.lit(ymin))
-
-
 def point_struct_from_xy(x: Column, y: Column) -> Column:
     """Geometry struct for a 2D point from already-parsed numeric
     columns (NULL when either is NULL) — same struct, bit-identical

@@ -153,11 +153,6 @@ def st_pointfromtext():
     return f
 
 
-def st_geomfromgeojson(strict: bool = False):
-    """GeoJSON geometry string -> struct (geojson_reader.rs:73-81)."""
-    return _decode_udf(kgeojson.decode, strict=strict)
-
-
 def st_geomfromwkb(dialect: str = kwkb.DIALECT_EWKB, strict: bool = False):
     """binary -> struct; dialect in wkb/ewkb/gpkg/spatialite/mysql
     (wkb_reader.rs:115-150)."""

@@ -460,30 +460,22 @@ SHP_FIXTURE_CAP = 10_000
 
 
 def _write_point_shp_executor(src: DataFrame, path: str) -> None:
-    """Write a Point shapefile from ONE executor task (mapInPandas over
-    a single sorted partition): the row slice never transits the
-    driver. The cap bounds task memory; writes go to a temp file then
-    rename, so a killed task never leaves a half-written fixture."""
-    import os
+    """Write a Point shapefile in doc_id order from ONE executor task
+    (``readers._write_one_file``): the row slice never transits the
+    driver. The cap bounds task memory; the temp-write + rename means
+    a killed task never leaves a half-written fixture."""
+    from .sources import readers
 
-    def write_part(batches):
-        import pandas as pd
-
+    def encode(pdf):
         from geozero_spark.kernel import shp as kshp
         from geozero_spark.kernel.model import POINT, Geom
 
-        pdf = pd.concat(list(batches), ignore_index=True)
         pdf = pdf.sort_values("doc_id")
-        buf = kshp.encode([Geom(POINT, (float(x), float(y)))
-                           for x, y in zip(pdf["xc"], pdf["yc"])])
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [len(pdf)]})
+        pts = [Geom(POINT, (float(x), float(y)))
+               for x, y in zip(pdf["xc"], pdf["yc"])]
+        return kshp.encode(pts), len(pts)
 
-    (src.coalesce(1).sortWithinPartitions("doc_id")
-        .mapInPandas(write_part, "n long").count())
+    readers._write_one_file(src, path, encode)
 
 
 def q_shp_decode(spark, sf_dir):

@@ -12,11 +12,17 @@
 All return a DataFrame with a decoded ``geom`` struct column plus a
 ``props`` map<string,string> for the schema-less property bags
 (property_processor.rs:53-60: names/types may vary per row).
+
+Every container-file sink (fgb, gpkg, each convert() output, the shp
+fixture) writes through ``_write_one_file`` or
+``_write_file_per_partition``.
 """
 
 from __future__ import annotations
 
 import json
+import os
+from functools import partial
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -345,14 +351,32 @@ def _rows_to_features(pdf: pd.DataFrame, geom_col: str,
     return feats
 
 
+def _explode_feature_json(raw: DataFrame, id_col: str) -> DataFrame:
+    """``(id_col, _recs)`` rows, ``_recs`` an array of per-feature JSON
+    strings (``_feature_json_rows``) -> JVM posexplode + from_json/unhex
+    -> decoded geometry struct + props map. One row per feature:
+    (id_col, feature_idx, geom, props). Plain posexplode: a file or
+    split yielding zero features (a bbox pruning everything, an
+    empty-but-valid container) contributes ZERO rows, not a phantom
+    all-NULL feature."""
+    dec = udfs.st_geomfromwkb(dialect="ewkb")
+    return (raw.select(
+        id_col, F.posexplode("_recs").alias("feature_idx", "_j"))
+        .withColumn("_r", F.from_json(
+            "_j", "wkb string, props map<string,string>"))
+        .withColumn("geom", F.when(
+            F.col("_r.wkb").isNotNull(),
+            dec(F.unhex(F.col("_r.wkb")))))
+        .withColumn("props", F.col("_r.props"))
+        .drop("_j", "_r"))
+
+
 def _feature_blob_scan(spark: SparkSession, path: str, glob: str,
                        feat_iter) -> DataFrame:
     """Shared feature-file scan plumbing: binaryFile -> per-file
     kernel iterator yielding (Geom|None, props dict) -> one JSON
-    string per feature (wkb hex + stringified props; pyspark's Arrow
-    serializer crashes on struct-typed UDF outputs — types.py metadata
-    bug, see PLANS.md) -> JVM posexplode + from_json/unhex -> decoded
-    geometry struct + props map. One row per feature:
+    string per feature (``_feature_json_rows``) ->
+    ``_explode_feature_json``. One row per feature:
     (path, feature_idx, geom, props)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
@@ -363,22 +387,10 @@ def _feature_blob_scan(spark: SparkSession, path: str, glob: str,
                for buf in content]
         return pd.Series(out, dtype=object)
 
-    dec = udfs.st_geomfromwkb(dialect="ewkb")
     raw = (spark.read.format("binaryFile")
            .option("pathGlobFilter", glob).load(path)
            .select("path", records(F.col("content")).alias("_recs")))
-    # plain posexplode: a file yielding zero features (e.g. a bbox
-    # pruning everything, or an empty-but-valid container) contributes
-    # ZERO rows, not a phantom all-NULL feature
-    return (raw.select(
-        "path", F.posexplode("_recs").alias("feature_idx", "_j"))
-        .withColumn("_r", F.from_json(
-            "_j", "wkb string, props map<string,string>"))
-        .withColumn("geom", F.when(
-            F.col("_r.wkb").isNotNull(),
-            dec(F.unhex(F.col("_r.wkb")))))
-        .withColumn("props", F.col("_r.props"))
-        .drop("_j", "_r"))
+    return _explode_feature_json(raw, "path")
 
 
 def read_fgb(spark: SparkSession, path: str,
@@ -465,22 +477,104 @@ def read_fgb_ranged(spark: SparkSession, url: str,
             out.append(_feature_json_rows(it))
         return pd.Series(out, dtype=object)
 
-    dec = udfs.st_geomfromwkb(dialect="ewkb")
     tdf = spark.createDataFrame(tasks, "split_id int, payload string") \
         .repartition(len(tasks), "split_id")
     raw = tdf.select("split_id", fetch(F.col("payload")).alias("_recs"))
-    # plain posexplode: an empty split (e.g. a bbox with no hits) must
-    # contribute ZERO rows, not a phantom all-NULL feature
-    return (raw.select(
-        "split_id",
-        F.posexplode("_recs").alias("feature_idx", "_j"))
-        .withColumn("_r", F.from_json(
-            "_j", "wkb string, props map<string,string>"))
-        .withColumn("geom", F.when(
-            F.col("_r.wkb").isNotNull(),
-            dec(F.unhex(F.col("_r.wkb")))))
-        .withColumn("props", F.col("_r.props"))
-        .drop("_j", "_r"))
+    return _explode_feature_json(raw, "split_id")
+
+
+def _drain(batches: Iterator[pd.DataFrame], columns: list) -> pd.DataFrame:
+    """The task's Arrow batches as one frame. An EMPTY input is legal:
+    no batches arrive (and pd.concat([]) raises), so it becomes an
+    empty frame with the DataFrame's driver-side ``columns``."""
+    got = list(batches)
+    return (pd.concat(got, ignore_index=True) if got
+            else pd.DataFrame(columns=columns))
+
+
+def _replace(path: str, payload: bytes) -> None:
+    """Temp-write + rename, so a killed task never leaves a
+    half-written file at ``path``."""
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as f:
+        f.write(payload)
+    os.replace(tmp, path)
+
+
+def _write_one_file(df: DataFrame, path: str, encode) -> int:
+    """Single-container file sink: ONE executor task (mapInPandas over
+    the coalesced partition, which keeps row order) drains every row,
+    ``encode(pdf) -> (bytes, n)`` builds the file and ``_replace``
+    writes it. The rows never transit the driver; on a real cluster
+    ``path`` must be shared storage. Returns n."""
+    columns = df.columns
+
+    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        payload, n = encode(_drain(batches, columns))
+        _replace(path, payload)
+        yield pd.DataFrame({"n": [n]})
+
+    return int(df.coalesce(1).mapInPandas(part, "n long")
+               .agg(F.sum("n")).collect()[0][0] or 0)
+
+
+def _write_file_per_partition(df: DataFrame, path: str, ext: str,
+                              encode) -> int:
+    """Partition-parallel file sink: each task writes its partition as
+    ``path/part-{pid:05d}.{ext}`` (``encode(pdf) -> (bytes, n)``, then
+    ``_replace``); an empty partition writes nothing. Returns the
+    number of files written. A directory already holding
+    ``part-*.{ext}`` files raises FileExistsError (nothing is deleted):
+    a directory scan would read the old parts back mixed with the new.
+    On a real cluster ``path`` must be shared storage."""
+    os.makedirs(path, exist_ok=True)
+    old = sorted(f for f in os.listdir(path)
+                 if f.startswith("part-") and f.endswith("." + ext))
+    if old:
+        raise FileExistsError(
+            f"{path} already holds {old[0]} ({len(old)} part-*.{ext} "
+            f"files) from an earlier write; write to a new or empty "
+            f"directory")
+    columns = df.columns
+
+    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        pdf = _drain(batches, columns)
+        if len(pdf) == 0:
+            return
+        payload, n = encode(pdf)
+        pid = TaskContext.get().partitionId()
+        _replace(os.path.join(path, f"part-{pid:05d}.{ext}"), payload)
+        yield pd.DataFrame({"n": [n]})
+
+    return df.mapInPandas(part, "n long").count()
+
+
+def _feature_encoder(df: DataFrame, geom_col: str, encode_features):
+    """``encode(pdf) -> (bytes, n)`` for the feature sinks: rows ->
+    (Geom, props) features (every non-geometry column a property) ->
+    ``encode_features(feats)`` container bytes."""
+    prop_cols = [c for c in df.columns if c != geom_col]
+
+    def encode(pdf: pd.DataFrame):
+        feats = _rows_to_features(pdf, geom_col, prop_cols)
+        return encode_features(feats), len(feats)
+
+    return encode
+
+
+def _fgb_encoder(df, geom_col, name, srid, index_node_size):
+    from ..kernel import fgbwrite
+    return _feature_encoder(df, geom_col, partial(
+        fgbwrite.encode, name=name, srid=srid,
+        index_node_size=index_node_size))
+
+
+def _gpkg_encoder(df, geom_col, table, srid):
+    from ..kernel import gpkgwrite
+    return _feature_encoder(df, geom_col, partial(
+        gpkgwrite.encode, table=table, geom_col=geom_col, srid=srid))
 
 
 def write_fgb(df: DataFrame, path: str, geom_col: str = "geom",
@@ -490,41 +584,16 @@ def write_fgb(df: DataFrame, path: str, geom_col: str = "geom",
     FlatGeobuf file (kernel/fgbwrite.py — the reference's FgbWriter
     sink, geozero-cli/src/main.rs:161-166). Non-geometry columns become
     feature properties; features are Hilbert-sorted and indexed (spec
-    layout) unless some row lacks an envelope.
+    layout) unless some row lacks an envelope. An empty DataFrame
+    writes a valid header-only file.
 
     A .fgb is a single sequential container (header + packed R-tree +
     features), so like the shapefile writer it is produced by ONE
-    executor task via mapInPandas over a coalesced partition — the
-    rows never transit the driver; on a real cluster ``path`` must be
-    shared storage. Temp-write + rename, so a killed task never leaves
-    a half-written file. For partition-parallel output write a
-    DIRECTORY of .fgb files (one per partition) with this same kernel
-    — read_fgb scans directories."""
-    import os
-
-    prop_cols = [c for c in df.columns if c != geom_col]
-
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from geozero_spark.kernel import fgbwrite
-
-        got = list(batches)
-        # an EMPTY DataFrame is legal input: no Arrow batches arrive,
-        # and pd.concat([]) raises — a header-only .fgb is still a
-        # valid file
-        pdf = (pd.concat(got, ignore_index=True) if got
-               else pd.DataFrame(columns=[geom_col] + prop_cols))
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        buf = fgbwrite.encode(feats, name=name, srid=srid,
-                              index_node_size=index_node_size)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [len(feats)]})
-
-    return int(df.coalesce(1).mapInPandas(write_part, "n long")
-               .agg(F.sum("n")).collect()[0][0] or 0)
+    executor task (``_write_one_file``). For partition-parallel output
+    write a DIRECTORY of .fgb files (one per partition) with
+    write_fgb_dir — read_fgb scans directories."""
+    return _write_one_file(df, path, _fgb_encoder(
+        df, geom_col, name, srid, index_node_size))
 
 
 def write_fgb_dir(df: DataFrame, path: str, geom_col: str = "geom",
@@ -534,37 +603,12 @@ def write_fgb_dir(df: DataFrame, path: str, geom_col: str = "geom",
     into a directory (part-00000.fgb, ...), each file independently
     Hilbert-sorted and indexed — the parallel dual of write_fgb's
     single-container mode, and exactly what read_fgb's directory scan
-    consumes. Empty partitions write nothing. Returns the number of
-    files written. On a real cluster ``path`` must be shared storage;
-    repartition the input first to choose the file count/size."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    prop_cols = [c for c in df.columns if c != geom_col]
-
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from geozero_spark.kernel import fgbwrite
-
-        got = list(batches)
-        if not got:
-            yield pd.DataFrame({"n": pd.Series([], dtype="int64")})
-            return
-        pdf = pd.concat(got, ignore_index=True)
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}.fgb")
-        buf = fgbwrite.encode(feats, name=name, srid=srid,
-                              index_node_size=index_node_size)
-        tmp = out + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, out)
-        yield pd.DataFrame({"n": [len(feats)]})
-
-    return df.mapInPandas(write_part, "n long").count()
+    consumes (``_write_file_per_partition``: empty partitions write
+    nothing, a directory already holding part-*.fgb files raises
+    FileExistsError). Returns the number of files written. Repartition
+    the input first to choose the file count/size."""
+    return _write_file_per_partition(df, path, "fgb", _fgb_encoder(
+        df, geom_col, name, srid, index_node_size))
 
 
 def write_gpkg(df: DataFrame, path: str, geom_col: str = "geom",
@@ -574,10 +618,9 @@ def write_gpkg(df: DataFrame, path: str, geom_col: str = "geom",
     GeoPackage file (kernel/gpkgwrite.py — full GPKG core profile:
     application_id, srs registry, contents, geometry_columns, features
     with gpkg-dialect WKB). Like write_fgb, a .gpkg is a single
-    sequential container, so ONE executor task materializes it via
-    mapInPandas over a coalesced partition (temp-write + rename); on a
-    real cluster ``path`` must be shared storage. Output is valid per
-    sqlite3's integrity_check and readable by read_gpkg.
+    sequential container, so ONE executor task materializes it
+    (``_write_one_file``). Output is valid per sqlite3's
+    integrity_check and readable by read_gpkg.
 
     The single task holds the whole file's pages in memory, so this is
     a FIXTURE / dimension-table sink with a LOUD bound: more than
@@ -586,17 +629,9 @@ def write_gpkg(df: DataFrame, path: str, geom_col: str = "geom",
     silently OOMing the executor. The data-scale path is
     ``write_gpkg_dir`` — one file per partition, bounded per-task
     memory, read back by read_gpkg's directory scan."""
-    import os
+    encode = _gpkg_encoder(df, geom_col, table, srid)
 
-    prop_cols = [c for c in df.columns if c != geom_col]
-
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from geozero_spark.kernel import gpkgwrite
-
-        got = list(batches)
-        pdf = (pd.concat(got, ignore_index=True) if got
-               else pd.DataFrame(columns=[geom_col] + prop_cols))
+    def bounded(pdf: pd.DataFrame):
         if len(pdf) > max_rows:
             raise ValueError(
                 f"write_gpkg: {len(pdf)} rows exceed the single-file "
@@ -604,17 +639,9 @@ def write_gpkg(df: DataFrame, path: str, geom_col: str = "geom",
                 f"whole container) — use write_gpkg_dir for a "
                 f"partition-parallel directory sink, or raise "
                 f"max_rows knowingly")
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        buf = gpkgwrite.encode(feats, table=table, geom_col=geom_col,
-                               srid=srid)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [len(feats)]})
+        return encode(pdf)
 
-    return int(df.coalesce(1).mapInPandas(write_part, "n long")
-               .agg(F.sum("n")).collect()[0][0] or 0)
+    return _write_one_file(df, path, bounded)
 
 
 def write_gpkg_dir(df: DataFrame, path: str, geom_col: str = "geom",
@@ -622,39 +649,14 @@ def write_gpkg_dir(df: DataFrame, path: str, geom_col: str = "geom",
     """Partition-parallel GeoPackage sink: one .gpkg file PER PARTITION
     into a directory (part-00000.gpkg, ...) — the parallel dual of
     write_gpkg's single-container mode, mirroring write_fgb_dir, and
-    exactly what read_gpkg's directory scan consumes. Per-task memory
-    is bounded by the partition size (repartition the input to choose
-    file count/size). Empty partitions write nothing. Returns the
-    number of files written. On a real cluster ``path`` must be shared
-    storage."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    prop_cols = [c for c in df.columns if c != geom_col]
-
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from geozero_spark.kernel import gpkgwrite
-
-        got = list(batches)
-        if not got:
-            yield pd.DataFrame({"n": pd.Series([], dtype="int64")})
-            return
-        pdf = pd.concat(got, ignore_index=True)
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}.gpkg")
-        buf = gpkgwrite.encode(feats, table=table, geom_col=geom_col,
-                               srid=srid)
-        tmp = out + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, out)
-        yield pd.DataFrame({"n": [len(feats)]})
-
-    return df.mapInPandas(write_part, "n long").count()
+    exactly what read_gpkg's directory scan consumes
+    (``_write_file_per_partition``: empty partitions write nothing, a
+    directory already holding part-*.gpkg files raises
+    FileExistsError). Per-task memory is bounded by the partition size
+    (repartition the input to choose file count/size). Returns the
+    number of files written."""
+    return _write_file_per_partition(df, path, "gpkg", _gpkg_encoder(
+        df, geom_col, table, srid))
 
 
 def read_gpkg(spark: SparkSession, path: str,

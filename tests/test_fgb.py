@@ -331,3 +331,12 @@ def test_spark_write_fgb_dir_parallel_roundtrip(spark, tmpdir_path):
     hits = readers.read_fgb(spark, d, bbox=(0.0, 0.0, 3.0, 0.5)).collect()
     want = [i for i in range(200) if i % 50 <= 3 and i // 50 == 0]
     assert sorted(int(r.props["fid"]) for r in hits) == want
+
+    # a second write into the same directory is refused (the scan above
+    # would read the old parts back mixed with the new) and leaves the
+    # first write's files untouched
+    import pytest as _pytest
+    with _pytest.raises(FileExistsError, match="part-00000.fgb"):
+        readers.write_fgb_dir(df.limit(10).repartition(2), d, name="pts")
+    assert sorted(f for f in _os.listdir(d) if f.endswith(".fgb")) == files
+    assert readers.read_fgb(spark, d).count() == 200

@@ -319,8 +319,14 @@ def test_write_gpkg_dir_scale_and_single_file_guard(spark, tmp_path):
         feats = list(kgpkg.read_features(f.read(), table="pts"))
     assert feats and feats[0][1].kind == 1
 
-    # single-file sink: loud bound, not a silent executor OOM
+    # a second write into the same directory is refused, not mixed in
+    # with the first write's parts, and deletes nothing
     import pytest as _pytest
+    with _pytest.raises(FileExistsError, match="part-00000.gpkg"):
+        readers.write_gpkg_dir(df.limit(10).repartition(2), d, table="pts")
+    assert sorted(os.listdir(d)) == files
+
+    # single-file sink: loud bound, not a silent executor OOM
     with _pytest.raises(Exception, match="write_gpkg_dir"):
         readers.write_gpkg(df.limit(1000), os.path.join(
             str(tmp_path), "cap.gpkg"), max_rows=100)

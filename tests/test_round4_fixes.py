@@ -259,19 +259,32 @@ def test_jpeg_fill_bytes_before_marker():
         assert _jpeg_dims(padded) == (320, 200), fills
 
 
-def test_write_fgb_empty_dataframe(spark, tmp_path):
-    """An empty DataFrame writes a valid header-only .fgb."""
+@pytest.mark.parametrize("sink", ["write_fgb", "write_gpkg",
+                                  "write_fgb_dir", "write_gpkg_dir"])
+def test_write_sink_empty_dataframe(spark, tmp_path, sink):
+    """An empty DataFrame is legal input for every container sink: the
+    single-file sinks write a valid zero-feature file, the directory
+    sinks write no file and return 0."""
     import os
+    import sqlite3
 
-    from geozero_spark.kernel import fgb, structrepr as sr
+    from geozero_spark.kernel import fgb, gpkg, structrepr as sr
     from geozero_spark.sources import readers
-    from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [], f"fid long, geom struct<{sr.GEOMETRY_DDL}>")
-    path = os.path.join(str(tmp_path), "empty.fgb")
-    readers.write_fgb(df, path, name="empty")
+    path = os.path.join(str(tmp_path), sink)
+    assert getattr(readers, sink)(df, path) == 0
+    if sink.endswith("_dir"):
+        assert os.listdir(path) == []
+        return
     buf = open(path, "rb").read()
-    info = fgb.read_info(buf)
-    assert info.features_count == 0
-    assert list(fgb.iter_features(buf)) == []
+    if sink == "write_fgb":
+        assert fgb.read_info(buf).features_count == 0
+        assert list(fgb.iter_features(buf)) == []
+        return
+    con = sqlite3.connect(path)
+    assert con.execute("pragma integrity_check").fetchone() == ("ok",)
+    assert con.execute("select count(*) from features").fetchone() == (0,)
+    con.close()
+    assert list(gpkg.read_features(buf)) == []
